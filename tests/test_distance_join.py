@@ -255,3 +255,18 @@ def test_haversine_includes_transpolar_pair_equirect_misses_scale(spark):
         12.0, metric="equirectangular",
     )
     assert len(got_h) == 1 and len(got_e) == 0
+
+
+def test_haversine_radius_above_90_sparse(spark):
+    """Sparse data, radius past 90 degrees of arc: any such cap holds a
+    pole, so the lon fan-out must be the full ring. An equatorial query
+    at a 120-degree radius must find the point 110 degrees east, which
+    the unclamped asin law (a 60-degree fan) misses."""
+    qlon, qlat = np.array([0.0, 0.0]), np.array([0.0, 45.0])
+    dlon, dlat = np.array([110.0, -150.0, 30.0]), np.array([0.0, 10.0, -20.0])
+    for max_d in (90.0, 120.0, 170.0):
+        got = _got(
+            spark, qlon, qlat, dlon, dlat, max_d, metric="haversine", level=4
+        )
+        exp = _twin_hav(qlon, qlat, dlon, dlat, max_d, did0=10_000)
+        assert got == exp, (max_d, sorted(got ^ exp))

@@ -431,3 +431,28 @@ def test_knn_points_haversine_pole_and_wrap(spark):
         qlon, qlat, np.array([0]), dlon, dlat, np.array([3, 4]), 2
     )
     assert {(r.query_id, r.data_id, r.d2_u, r.rank) for r in got} == exp
+
+
+def test_knn_points_haversine_sparse_huge_radius(spark):
+    """Sparse data: the frontier loop must grow past a 90-degree cap
+    (here r=12 and r=16 cells of 11.25 degrees) and still cover every
+    longitude. The point 130 degrees east of the equatorial query is
+    second nearest; an under-covering lon fan-out drops it."""
+    qlon, qlat = np.array([0.0]), np.array([0.0])
+    dlon, dlat = np.array([0.0, 130.0]), np.array([50.0, 0.0])
+    data = spark.createDataFrame(
+        [(i, float(dlon[i]), float(dlat[i])) for i in range(2)],
+        "data_id long, lon double, lat double",
+    )
+    queries = spark.createDataFrame(
+        [(0, 0.0, 0.0)], "query_id long, lon double, lat double"
+    )
+    got = {
+        (r.query_id, r.data_id, r.d2_u, r.rank)
+        for r in knn_points_join(
+            queries, data, k=2, level=4, radius=3, max_radius=1 << 4,
+            metric="haversine",
+        ).collect()
+    }
+    exp = _brute_knn_hav(qlon, qlat, np.array([0]), dlon, dlat, np.arange(2), 2)
+    assert got == exp
