@@ -59,28 +59,13 @@ def _probe_cells_df(probes, level: int, radius: int):
 def _edge_distance(
     poly, lons: np.ndarray, lats: np.ndarray, metric: str = "planar"
 ) -> np.ndarray:
-    """Min distance from each point to any edge of any ring — planar
-    degrees, or equirectangular (lon scaled by cos(probe lat)) when
-    ``metric="equirectangular"`` (cogroup twin of
-    PipIndex.edge_distance's metric option)."""
-    best = np.full(len(lons), np.inf)
-    px = lons[:, None]
-    py = lats[:, None]
-    k2 = np.cos(np.radians(py)) ** 2 if metric == "equirectangular" else 1.0
-    for ring in poly:
-        xs = np.asarray([p[0] for p in ring], dtype=np.float64)
-        ys = np.asarray([p[1] for p in ring], dtype=np.float64)
-        x1, y1, x2, y2 = xs[:-1], ys[:-1], xs[1:], ys[1:]
-        dx, dy = x2 - x1, y2 - y1
-        seg2 = k2 * (dx * dx)[None, :] + (dy * dy)[None, :]
-        seg2 = np.where(seg2 == 0.0, 1e-300, seg2)
-        t = (k2 * (px - x1[None, :]) * dx[None, :] + (py - y1[None, :]) * dy[None, :]) / seg2
-        t = np.clip(t, 0.0, 1.0)
-        cx = x1[None, :] + t * dx[None, :]
-        cy = y1[None, :] + t * dy[None, :]
-        d2 = k2 * (px - cx) ** 2 + (py - cy) ** 2
-        best = np.minimum(best, np.sqrt(d2.min(axis=1)))
-    return best
+    """Min distance from each point to any edge of any ring of one
+    polygon — ``PipIndex.edge_distance`` on a one-polygon index, so the
+    cogroup path runs the broadcast path's kernel."""
+    from osm_spark.spatial.pip_index import PipIndex, poly_rings
+
+    idx = PipIndex([], {}, {(0, 0): poly_rings(poly)})
+    return idx.edge_distance(0, 0, lons, lats, metric=metric)
 
 
 DIST_SCHEMA = "point_id long, rel_id long, poly_idx int, dist double"

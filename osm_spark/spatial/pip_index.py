@@ -18,12 +18,20 @@ once, and the page side streams through ONE ``mapInPandas`` pass:
       per covering level: ancestor by shift + np.searchsorted into the
         level's sorted cell array           (candidate gather)
       interior-cell hits -> accepted, no geometry touched
-      boundary-cell hits -> exact crossing-number PIP against the
-        index's geometry, grouped by polygon WITHIN the batch
+      boundary-cell hits -> ONE batch refine: each candidate gathers
+        the edges of its polygon's latitude row from a row-banded edge
+        table, one vectorized crossing-number / on-edge pass evaluates
+        every (candidate, edge) pair, np.bincount reduces per ring
 
     => zero shuffles, zero joins on the page side; parallelism equals
        the input partitioning; skew equals input skew (a hot city cell
        stays spread across whatever partitions its pages arrived in).
+
+The edge table is derived data: each process compiles it from the
+geometry on first use, and it never travels in the broadcast pickle.
+Its rows are latitude bands at the index's max covering level, the
+level of every boundary cell, so a row list holds about the edges of
+that row's boundary cells (refs ≲ edges + boundary cells).
 
 The per-row invariant (byte-identical text per url) is untouched: the
 page side is only ever projected, never rewritten.
@@ -41,6 +49,7 @@ paths is pinned by tests.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -49,10 +58,87 @@ from pyspark.sql import functions as F
 
 from osm_spark.kernels.cells import cell_parent, point_to_cell
 
-# Max elements of any dense (points × segments) intermediate inside the
-# exact kernels — ~32 MB of float64 per temporary. Bounds executor
+# Max elements of any dense intermediate inside the exact kernels:
+# (candidate, edge) pairs per refine chunk, (points × segments) per
+# edge_distance tile — ~32 MB of float64 per temporary. Bounds executor
 # memory regardless of polygon vertex count or Arrow batch size.
 TILE_ELEMS = 4 * 1024 * 1024
+
+# Row level of the edge table of a geometry-only index (no covering to
+# take the max level from): build_polygon_cells' default max_level.
+GEOMETRY_ROW_LEVEL = 12
+
+
+def _lat_rows(lats: np.ndarray, level: int) -> np.ndarray:
+    """Latitude row at ``level`` (point_to_cell's y). Every step is a
+    monotone float operation, so lat ∈ [y_lo, y_hi] implies
+    row(lat) ∈ [row(y_lo), row(y_hi)] bit-exactly."""
+    n = 1 << level
+    with np.errstate(invalid="ignore"):
+        return np.clip(((lats + 90.0) / 180.0 * n).astype(np.int64), 0, n - 1)
+
+
+def _poly_keys(rel, poly) -> np.ndarray:
+    return np.asarray(rel, dtype=np.int64) * np.int64(1 << 20) + np.asarray(
+        poly, dtype=np.int64
+    )
+
+
+def _edge_table(geom: dict, level: int) -> SimpleNamespace:
+    """Flat edge table of every polygon in ``geom``.
+
+    Vertices of all rings are concatenated into ``x``/``y``; an edge is
+    named by its start vertex ``v`` (end vertex ``v + 1``). Polygons are
+    dense in ``keys`` order. Per polygon ``p``: rings
+    ``ring0[p]:ring0[p+1]`` (global ids, outer first, starting at
+    vertex ``ring_start``), edges ``edge_v[edge0[p]:edge0[p+1]]``, and a
+    CSR over its latitude rows ``row0[p] ..``: row ``r`` is slot
+    ``base[p] + r - row0[p]`` and lists the edges whose closed y-extent
+    touches it as ``ids[offs[slot]:offs[slot+1]]``.
+    """
+    keys = sorted(geom, key=lambda k: (k[0] << 20) + k[1])
+    rings = [ring for k in keys for ring in geom[k]]
+    ring0 = np.zeros(len(keys) + 1, dtype=np.int64)
+    ring0[1:] = np.cumsum([len(geom[k]) for k in keys])
+    lens = np.array([len(xs) for xs, _ in rings], dtype=np.int64)
+    ring_start = np.cumsum(lens) - lens
+    x = np.concatenate([xs for xs, _ in rings] + [np.empty(0)]).astype(np.float64)
+    y = np.concatenate([ys for _, ys in rings] + [np.empty(0)]).astype(np.float64)
+    is_start = np.ones(len(x), dtype=bool)
+    is_start[(ring_start + lens - 1)[lens > 0]] = False
+    vid = np.int32 if len(x) < (1 << 31) else np.int64
+    edge_v = np.flatnonzero(is_start).astype(vid)
+    poly_v0 = np.append(ring_start, len(x))[ring0]
+    edge0 = np.searchsorted(edge_v, poly_v0)
+    n_edges = np.diff(edge0)
+
+    y1, y2 = y[edge_v], y[edge_v + 1]
+    lo = _lat_rows(np.minimum(y1, y2), level)
+    hi = _lat_rows(np.maximum(y1, y2), level)
+    has = n_edges > 0
+    row0 = np.zeros(len(keys), dtype=np.int64)
+    span = np.zeros(len(keys), dtype=np.int64)
+    if has.any():
+        row0[has] = np.minimum.reduceat(lo, edge0[:-1][has])
+        span[has] = np.maximum.reduceat(hi, edge0[:-1][has]) - row0[has] + 1
+    base = np.zeros(len(keys) + 1, dtype=np.int64)
+    base[1:] = np.cumsum(span)
+
+    cnt = hi - lo + 1
+    ref = np.repeat(np.arange(len(edge_v)), cnt)
+    ep = np.repeat(np.arange(len(keys)), n_edges)[ref]
+    row = lo[ref] + np.arange(len(ref)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    slot = base[ep] + row - row0[ep]
+    order = np.argsort(slot, kind="stable")
+    offs = np.zeros(base[-1] + 1, dtype=np.int64)
+    offs[1:] = np.cumsum(np.bincount(slot, minlength=base[-1]))
+    return SimpleNamespace(
+        level=level,
+        keys=_poly_keys([k[0] for k in keys], [k[1] for k in keys]),
+        x=x, y=y, ring0=ring0, ring_start=ring_start,
+        edge_v=edge_v, edge0=edge0,
+        row0=row0, base=base, offs=offs, ids=edge_v[ref[order]],
+    )
 
 
 class PipIndex:
@@ -70,34 +156,21 @@ class PipIndex:
         self.levels = levels
         self.per_level = per_level
         self.geom = geom
-        # Per-polygon segment arrays with bboxes, built lazily per
-        # process (derived data — excluded from the broadcast pickle so
-        # the shipped index stays geometry-sized).
-        self._segs: dict = {}
+        # Row-banded edge table, built lazily per process (derived
+        # data — excluded from the broadcast pickle so the shipped
+        # index stays geometry-sized).
+        self._table = None
 
     def __getstate__(self):
         d = self.__dict__.copy()
-        d["_segs"] = {}
+        d["_table"] = None
         return d
 
-    def _ring_segs(self, rel: int, poly: int):
-        """Per-ring segment endpoint + bbox arrays (cached)."""
-        key = (rel, poly)
-        cached = self._segs.get(key)
-        if cached is None:
-            cached = []
-            for xs, ys in self.geom[key]:
-                x1, y1, x2, y2 = xs[:-1], ys[:-1], xs[1:], ys[1:]
-                cached.append(
-                    (
-                        x1, y1, x2, y2,
-                        np.maximum(x1, x2),
-                        np.minimum(y1, y2),
-                        np.maximum(y1, y2),
-                    )
-                )
-            self._segs[key] = cached
-        return cached
+    def _edges(self) -> SimpleNamespace:
+        if self._table is None:
+            level = self.levels[-1] if self.levels else GEOMETRY_ROW_LEVEL
+            self._table = _edge_table(self.geom, level)
+        return self._table
 
     # -- candidate gather (vectorized) ------------------------------------
 
@@ -107,9 +180,8 @@ class PipIndex:
         Returns five aligned arrays. A point hits at most one covering
         cell per polygon (quadtree cells of one covering are disjoint),
         so hits are unique per (point, rel, poly) by construction. The
-        hit cell id lets callers group boundary refinement per cell —
-        the tight grouping that makes ``contains``'s segment slice
-        effective.
+        hit cell id is returned for diagnostics (covering statistics);
+        refinement does not need it.
         """
         if not self.levels:
             z = np.empty(0, dtype=np.int64)
@@ -150,85 +222,101 @@ class PipIndex:
 
     # -- exact geometry ----------------------------------------------------
 
-    def contains(self, rel: int, poly: int, lons: np.ndarray, lats: np.ndarray):
-        """Exact PIP (crossing number, boundary excluded — same
-        semantics as pip_join._point_in_float_polygon_np; tests pin
-        path equality).
+    def refine(self, pt, rel, poly, lons: np.ndarray, lats: np.ndarray):
+        """Exact PIP for a whole batch of candidates: is point
+        ``(lons[pt[i]], lats[pt[i]])`` inside polygon ``(rel[i],
+        poly[i])``? Crossing number per ring (holes subtract), boundary
+        excluded — the formula of the round-1 dense kernel.
 
-        Memory/FLOP bounds (VERDICT r2 "what's wrong" #1): the dense
-        (points × segments) intermediates are (a) SLICED to the
-        segments that can influence this point group and (b) TILED
-        under a fixed element budget, so a planet-coastline polygon
-        (10^5+ segments) against a 10^4-row Arrow batch peaks at
-        ~TILE_ELEMS float64 elements instead of ~8 GB.
+        Each candidate is expanded to the edges of its (polygon, point
+        row) list; ``cross``/``on``/``straddle``/``xint`` are the dense
+        kernel's per-edge expressions, evaluated on the pairs whose
+        closed y-extent holds the point (every other edge contributes
+        neither a crossing nor an on-edge hit). Rows are monotone in
+        latitude, so every such edge is in the point's row list: the
+        result is bit-identical to testing all edges of the polygon.
+        Crossing parity per (candidate, ring) and the on-edge test per
+        candidate reduce with np.bincount. Pairs are processed in
+        chunks, so a coastline-class polygon
+        against a full Arrow batch stays memory-bounded (TILE_ELEMS / 8
+        pairs per chunk).
 
-        Slice correctness: a horizontal +x ray from p=(px, py) can only
-        cross edges with seg_min_y ≤ py ≤ seg_max_y and seg_max_x > px,
-        and an on-edge hit needs the edge bbox to contain p — so
-        restricting to edges with seg_min_y ≤ max(lats),
-        seg_max_y ≥ min(lats), seg_max_x ≥ min(lons) drops only edges
-        that contribute 0 crossings / no hit for EVERY point in the
-        group. The bounds come from the points themselves (never from
-        float-rounded cell boxes), so results are bit-identical to the
-        unsliced kernel. Callers maximize the cut by grouping points
-        per covering cell (pip_join_index): the slice then holds ~the
-        cell's own edges, cutting FLOPs ~segments/boundary-cells-fold.
-
-        Missing geometry (inconsistent candidate input) matches the
-        historical cogroup drop semantics: no rows, not a task failure.
+        Candidates whose (rel, poly) has no geometry get False — the
+        historical cogroup drop semantics on inconsistent input.
         """
-        if len(lons) == 0 or (rel, poly) not in self.geom:
-            return np.zeros(len(lons), dtype=bool)
-        inside = np.zeros(len(lons), dtype=bool)
-        on_edge = np.zeros(len(lons), dtype=bool)
-        lat_lo, lat_hi = lats.min(), lats.max()
-        lon_lo = lons.min()
-        for ring_idx, (x1, y1, x2, y2, maxx, miny, maxy) in enumerate(
-            self._ring_segs(rel, poly)
-        ):
-            use = (miny <= lat_hi) & (maxy >= lat_lo) & (maxx >= lon_lo)
-            if not use.all():
-                sel = np.flatnonzero(use)
-                x1, y1, x2, y2 = x1[sel], y1[sel], x2[sel], y2[sel]
-            n_s = len(x1)
-            ring_inside = np.zeros(len(lons), dtype=bool)
-            if n_s:
-                dx = x2 - x1
-                dy = y2 - y1
-                s_tile = min(n_s, TILE_ELEMS)
-                p_tile = max(1, TILE_ELEMS // s_tile)
-                for i in range(0, len(lons), p_tile):
-                    px = lons[i : i + p_tile, None]
-                    py = lats[i : i + p_tile, None]
-                    crossings = np.zeros(px.shape[0], dtype=np.int64)
-                    on_any = np.zeros(px.shape[0], dtype=bool)
-                    for j in range(0, n_s, s_tile):
-                        sx1 = x1[None, j : j + s_tile]
-                        sy1 = y1[None, j : j + s_tile]
-                        sx2 = x2[None, j : j + s_tile]
-                        sy2 = y2[None, j : j + s_tile]
-                        sdx = dx[None, j : j + s_tile]
-                        sdy = dy[None, j : j + s_tile]
-                        cross = sdx * (py - sy1) - sdy * (px - sx1)
-                        on = (
-                            (cross == 0.0)
-                            & (np.minimum(sx1, sx2) <= px)
-                            & (px <= np.maximum(sx1, sx2))
-                            & (np.minimum(sy1, sy2) <= py)
-                            & (py <= np.maximum(sy1, sy2))
-                        )
-                        on_any |= on.any(axis=1)
-                        straddle = (sy1 > py) != (sy2 > py)
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            xint = sx1 + (py - sy1) * sdx / sdy
-                        crossings += (straddle & (px < xint)).sum(axis=1)
-                    on_edge[i : i + p_tile] |= on_any
-                    ring_inside[i : i + p_tile] = (crossings & 1).astype(bool)
-            if ring_idx == 0:
-                inside = ring_inside
-            else:
-                inside &= ~ring_inside
+        lons = np.asarray(lons, dtype=np.float64)
+        lats = np.asarray(lats, dtype=np.float64)
+        pt = np.asarray(pt, dtype=np.int64)
+        n = len(pt)
+        inside = np.zeros(n, dtype=bool)
+        t = self._edges()
+        if n == 0 or len(t.keys) == 0:
+            return inside
+        key = _poly_keys(rel, poly)
+        p = np.minimum(np.searchsorted(t.keys, key), len(t.keys) - 1)
+        known = t.keys[p] == key
+        px, py = lons[pt], lats[pt]
+        r = _lat_rows(py, t.level) - t.row0[p]
+        ok = known & (r >= 0) & (r < t.base[p + 1] - t.base[p])
+        slot = np.where(ok, t.base[p] + r, 0)
+        lo = t.offs[slot]
+        cnt = np.where(ok, t.offs[slot + 1] - lo, 0)
+        n_rings = np.where(known, t.ring0[p + 1] - t.ring0[p], 0)
+        rbase = np.cumsum(n_rings) - n_rings
+        odd = np.zeros(int(n_rings.sum()), dtype=bool)  # parity per (cand, ring)
+        on_edge = np.zeros(n, dtype=bool)
+        ends = np.cumsum(cnt)
+        starts = ends - cnt
+        # About a dozen per-pair arrays are live at once, so a chunk
+        # takes 1/8 of the element budget.
+        chunk = max(1, TILE_ELEMS // 8)
+        for a in range(0, int(ends[-1]), chunk):
+            b = min(int(ends[-1]), a + chunk)
+            cs = np.arange(
+                np.searchsorted(ends, a, side="right"),
+                np.searchsorted(ends, b - 1, side="right") + 1,
+            )
+            m = np.minimum(ends[cs], b) - np.maximum(starts[cs], a)
+            c = np.repeat(cs, m)
+            v = t.ids[np.arange(a, b) + np.repeat(lo[cs] - starts[cs], m)]
+            cy = py[c]
+            y1, y2 = t.y[v], t.y[v + 1]
+            straddle = (y1 > cy) != (y2 > cy)
+            near = np.flatnonzero(straddle | (y1 == cy) | (y2 == cy))
+            c, v, cy, y1, y2 = c[near], v[near], cy[near], y1[near], y2[near]
+            straddle = straddle[near]
+            cx, x1, x2 = px[c], t.x[v], t.x[v + 1]
+            dx, dy = x2 - x1, y2 - y1
+            cross = dx * (cy - y1) - dy * (cx - x1)
+            on = (
+                (cross == 0.0)
+                & (np.minimum(x1, x2) <= cx)
+                & (cx <= np.maximum(x1, x2))
+                & (np.minimum(y1, y2) <= cy)
+                & (cy <= np.maximum(y1, y2))
+            )
+            on_edge[c[on]] = True
+            with np.errstate(divide="ignore", invalid="ignore"):
+                xint = x1 + (cy - y1) * dx / dy
+            hit = np.flatnonzero(straddle & (cx < xint))
+            ring = np.searchsorted(t.ring_start, v[hit], side="right") - 1
+            s = rbase[c[hit]] + ring - t.ring0[p[c[hit]]]
+            odd ^= (np.bincount(s, minlength=len(odd)) & 1).astype(bool)
+        has = n_rings > 0
+        inside[has] = odd[rbase[has]]
+        owner = np.repeat(np.arange(n), n_rings)
+        hole = odd.copy()
+        hole[rbase[has]] = False
+        inside[owner[hole]] = False
         return inside & ~on_edge
+
+    def contains(self, rel: int, poly: int, lons: np.ndarray, lats: np.ndarray):
+        """Exact PIP of every point against one polygon — ``refine``
+        with all points as candidates of ``(rel, poly)``."""
+        n = len(lons)
+        return self.refine(
+            np.arange(n), np.full(n, rel), np.full(n, poly), lons, lats
+        )
 
     def edge_distance(
         self,
@@ -249,56 +337,45 @@ class PipIndex:
         lat-degree-equivalent (× 111.195 km if physical units are
         wanted); at one latitude the two metrics rank identically.
 
-        Tiled under the same element budget as ``contains``; no bbox
-        slice (the nearest edge can lie anywhere). Missing geometry →
-        +inf distances (dropped by the caller's top-k), matching the
-        cogroup path's silent-drop semantics on inconsistent input.
+        Reads the polygon's edges from the edge table (no row band: the
+        nearest edge can lie anywhere), tiled under the TILE_ELEMS
+        budget. Missing geometry → +inf distances (dropped by the
+        caller's top-k), matching the cogroup path's silent-drop
+        semantics on inconsistent input.
         """
         best = np.full(len(lons), np.inf)
-        if (rel, poly) not in self.geom:
+        tab = self._edges()
+        key = _poly_keys(rel, poly)
+        p = int(np.searchsorted(tab.keys, key))
+        if p == len(tab.keys) or tab.keys[p] != key:
             return best
-        equirect = metric == "equirectangular"
-        for x1, y1, x2, y2, _maxx, _miny, _maxy in self._ring_segs(rel, poly):
-            n_s = len(x1)
-            if not n_s:
-                continue
-            dx, dy = x2 - x1, y2 - y1
-            seg2 = dx * dx + dy * dy
-            seg2 = np.where(seg2 == 0.0, 1e-300, seg2)
-            s_tile = min(n_s, TILE_ELEMS)
-            p_tile = max(1, TILE_ELEMS // s_tile)
-            for i in range(0, len(lons), p_tile):
-                px = lons[i : i + p_tile, None]
-                py = lats[i : i + p_tile, None]
-                if equirect:
-                    k2 = np.cos(np.radians(py)) ** 2  # per-point lon scale²
-                acc = best[i : i + p_tile]
-                for j in range(0, n_s, s_tile):
-                    sx1 = x1[None, j : j + s_tile]
-                    sy1 = y1[None, j : j + s_tile]
-                    sdx = dx[None, j : j + s_tile]
-                    sdy = dy[None, j : j + s_tile]
-                    if equirect:
-                        # Point-to-segment in (cos(lat)·lon, lat) space:
-                        # the projection parameter and distance both
-                        # carry the per-point scale on the lon axis.
-                        s2 = k2 * sdx * sdx + sdy * sdy
-                        s2 = np.where(s2 == 0.0, 1e-300, s2)
-                        t = (k2 * (px - sx1) * sdx + (py - sy1) * sdy) / s2
-                        t = np.clip(t, 0.0, 1.0)
-                        cx = sx1 + t * sdx
-                        cy = sy1 + t * sdy
-                        d2 = k2 * (px - cx) ** 2 + (py - cy) ** 2
-                    else:
-                        t = (
-                            (px - sx1) * sdx + (py - sy1) * sdy
-                        ) / seg2[None, j : j + s_tile]
-                        t = np.clip(t, 0.0, 1.0)
-                        cx = sx1 + t * sdx
-                        cy = sy1 + t * sdy
-                        d2 = (px - cx) ** 2 + (py - cy) ** 2
-                    acc = np.minimum(acc, np.sqrt(d2.min(axis=1)))
-                best[i : i + p_tile] = acc
+        v = tab.edge_v[tab.edge0[p] : tab.edge0[p + 1]]
+        n_s = len(v)
+        if not n_s:
+            return best
+        x1, y1 = tab.x[v], tab.y[v]
+        dx, dy = tab.x[v + 1] - x1, tab.y[v + 1] - y1
+        s_tile = min(n_s, TILE_ELEMS)
+        p_tile = max(1, TILE_ELEMS // s_tile)
+        for i in range(0, len(lons), p_tile):
+            px = lons[i : i + p_tile, None]
+            py = lats[i : i + p_tile, None]
+            # Point-to-segment in (k·lon, lat) space, k² = cos²(lat) per
+            # point (equirectangular) or 1.0 (planar: a multiply by 1.0
+            # is exact, so this is the raw-degree formula bit for bit).
+            k2 = np.cos(np.radians(py)) ** 2 if metric == "equirectangular" else 1.0
+            acc = best[i : i + p_tile]
+            for j in range(0, n_s, s_tile):
+                sx1 = x1[None, j : j + s_tile]
+                sy1 = y1[None, j : j + s_tile]
+                sdx = dx[None, j : j + s_tile]
+                sdy = dy[None, j : j + s_tile]
+                s2 = k2 * sdx * sdx + sdy * sdy
+                s2 = np.where(s2 == 0.0, 1e-300, s2)
+                t = np.clip((k2 * (px - sx1) * sdx + (py - sy1) * sdy) / s2, 0.0, 1.0)
+                d2 = k2 * (px - (sx1 + t * sdx)) ** 2 + (py - (sy1 + t * sdy)) ** 2
+                acc = np.minimum(acc, np.sqrt(d2.min(axis=1)))
+            best[i : i + p_tile] = acc
         return best
 
 
@@ -320,6 +397,18 @@ def estimate_index_bytes(n_cells: int, n_ring_points: int, n_polys: int = 0) -> 
         + n_ring_points * INDEX_BYTES_PER_POINT
         + n_polys * 200
     )
+
+
+def poly_rings(poly) -> list:
+    """One polygon's rings ([[lon, lat], ...] per ring, outer first) as
+    the index's (xs, ys) float64 array pairs."""
+    return [
+        (
+            np.asarray([p[0] for p in ring], dtype=np.float64),
+            np.asarray([p[1] for p in ring], dtype=np.float64),
+        )
+        for ring in poly
+    ]
 
 
 def build_pip_index(
@@ -350,14 +439,7 @@ def build_pip_index(
         pc = polygon_cells.select("cell", "rel_id", "poly_idx", "interior").toPandas()
     geom = {}
     for row in polygons.select("rel_id", "poly_idx", "poly").toPandas().itertuples():
-        rings = [
-            (
-                np.asarray([p[0] for p in ring], dtype=np.float64),
-                np.asarray([p[1] for p in ring], dtype=np.float64),
-            )
-            for ring in row.poly
-        ]
-        geom[(int(row.rel_id), int(row.poly_idx))] = rings
+        geom[(int(row.rel_id), int(row.poly_idx))] = poly_rings(row.poly)
     n_ring_points = sum(
         len(xs) for rings in geom.values() for xs, _ys in rings
     )
@@ -421,33 +503,15 @@ def pip_join_index(points: DataFrame, index_bc, keep: tuple = ()) -> DataFrame:
             lons = pdf["lon"].to_numpy(np.float64)
             lats = pdf["lat"].to_numpy(np.float64)
             pids = pdf["point_id"].to_numpy(np.int64)
-            pt, rel, poly, interior, cell = idx.candidates(lons, lats)
-            # (point-row-index, rel, poly) pieces; point indices kept so
-            # passthrough columns gather once at the end.
-            acc = [(pt[interior], rel[interior], poly[interior])]
+            pt, rel, poly, interior, _cell = idx.candidates(lons, lats)
+            hit = interior.copy()
             b = ~interior
-            bpt, brel, bpoly, bcell = pt[b], rel[b], poly[b], cell[b]
-            if len(bpt):
-                # Group boundary candidates by (polygon, covering cell):
-                # per-cell point groups are spatially tight, so the
-                # exact kernel's segment slice reduces each test to
-                # ~the cell's own edges instead of the whole ring.
-                key = brel * np.int64(1 << 20) + bpoly
-                order = np.lexsort((bcell, key))
-                bpt, brel, bpoly = bpt[order], brel[order], bpoly[order]
-                key, bcell = key[order], bcell[order]
-                bounds = np.flatnonzero(
-                    (np.diff(key) != 0) | (np.diff(bcell) != 0)
-                ) + 1
-                for seg in np.split(np.arange(len(key)), bounds):
-                    r, p = int(brel[seg[0]]), int(bpoly[seg[0]])
-                    sel = idx.contains(r, p, lons[bpt[seg]], lats[bpt[seg]])
-                    acc.append((bpt[seg][sel], brel[seg][sel], bpoly[seg][sel]))
-            rows = np.concatenate([a[0] for a in acc])
+            hit[b] = idx.refine(pt[b], rel[b], poly[b], lons, lats)
+            rows = pt[hit]
             out = {
                 "point_id": pids[rows],
-                "rel_id": np.concatenate([a[1] for a in acc]),
-                "poly_idx": np.concatenate([a[2] for a in acc]).astype(np.int32),
+                "rel_id": rel[hit],
+                "poly_idx": poly[hit].astype(np.int32),
             }
             for c in keep:
                 out[c] = pdf[c].to_numpy()[rows]
@@ -587,13 +651,7 @@ def pip_join_index_sharded(
     geom = {}
     ext = []  # (key, lon_min, lon_max, lat_min, lat_max, ring_points)
     for row in polygons.select("rel_id", "poly_idx", "poly").toPandas().itertuples():
-        rings = [
-            (
-                np.asarray([p[0] for p in ring], dtype=np.float64),
-                np.asarray([p[1] for p in ring], dtype=np.float64),
-            )
-            for ring in row.poly
-        ]
+        rings = poly_rings(row.poly)
         key = (int(row.rel_id), int(row.poly_idx))
         geom[key] = rings
         n_pts = sum(len(xs) for xs, _ys in rings)

@@ -9,6 +9,7 @@ import tracemalloc
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from osm_spark.spatial import pip_index as P
 
@@ -98,30 +99,34 @@ def test_tiny_tile_budget_identical(star_index, monkeypatch):
 
 
 def test_high_vertex_polygon_memory_bound():
-    """Coastline-class polygon (6×10^4 segments) × thousands of points:
-    peak allocation stays ~TILE_ELEMS-scale, nowhere near the
-    points×segments dense matrix (~1 GB per temporary here).
+    """Coastline-class polygon (6×10^4 segments) × a full 10k-point
+    batch through the batch refine: peak allocation stays
+    ~TILE_ELEMS-scale, nowhere near the points×segments dense matrix
+    (~5 GB per temporary here).
     """
     big = [_star_ring(60001, 9.0, 10.0)]
     idx = P.PipIndex([], {}, {(2, 0): big})
     rng = np.random.default_rng(3)
-    lons = rng.uniform(-11, 11, 2000)
-    lats = rng.uniform(-11, 11, 2000)
-    idx._ring_segs(2, 0)  # build the cache outside the measurement
+    n = 10_000
+    lons = rng.uniform(-11, 11, n)
+    lats = rng.uniform(-11, 11, n)
+    idx._edges()  # build the per-process edge table outside the measurement
     tracemalloc.start()
-    got = idx.contains(2, 0, lons, lats)
+    got = idx.refine(
+        np.arange(n), np.full(n, 2), np.zeros(n, dtype=np.int64), lons, lats
+    )
     d = idx.edge_distance(2, 0, lons[:200], lats[:200])
     _, peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
     # The dense kernel's first temporary alone would be
-    # 60000*2000*8 ≈ 960 MB; the tiled kernel stays ~TILE_ELEMS-sized.
+    # 60000*10000*8 ≈ 4.8 GB; the chunked kernel stays ~TILE_ELEMS-sized.
     assert peak < 300e6, f"peak {peak/1e6:.0f} MB"
     # Spot-check correctness against the dense oracle on a slice.
-    sel = np.arange(0, 2000, 10)
+    sel = np.arange(0, n, 50)
     np.testing.assert_array_equal(got[sel], _brute_contains(big, lons[sel], lats[sel]))
     np.testing.assert_array_equal(d, _brute_dist(big, lons[:200], lats[:200]))
-    # The banded path (per covering cell grouping) is the hot-path
-    # shape: a tight group must not touch most segments.
+    # A latitude band of points shares few edge-table rows: the
+    # hot-path shape, where each candidate tests only its row's edges.
     band = np.abs(lats) < 0.02
     np.testing.assert_array_equal(got[band], _brute_contains(big, lons[band], lats[band]))
 
@@ -140,12 +145,84 @@ def test_index_pickle_drops_segment_cache(star_index):
     import pickle
 
     idx, _ = star_index
-    idx._ring_segs(1, 0)
-    assert idx._segs
+    idx._edges()
+    assert idx._table is not None
     clone = pickle.loads(pickle.dumps(idx))
-    assert clone._segs == {}
+    assert clone._table is None
     lons = np.array([0.0, 5.0, 11.0])
     lats = np.array([0.0, 5.0, 11.0])
     np.testing.assert_array_equal(
         clone.contains(1, 0, lons, lats), idx.contains(1, 0, lons, lats)
     )
+
+
+@st.composite
+def _refine_case(draw):
+    """Polygons and candidates on a grid of half edge-table rows, so
+    vertices, edges and points land exactly on row boundaries
+    (lat = k·h − 90), on vertices and on edges, with horizontal edges,
+    duplicate consecutive vertices, zero-area rings and holes."""
+    level = draw(st.sampled_from([None, 6, 9, 12, 14]))
+    u = 180.0 / (1 << (P.GEOMETRY_ROW_LEVEL if level is None else level)) / 2
+    grid = st.integers(-6, 6).map(lambda j: j * u)
+    free = st.floats(-7 * u, 7 * u, allow_nan=False)
+    vertex = st.tuples(grid, grid)
+
+    def ring():
+        kind = draw(st.sampled_from(["open", "closed", "zero_area"]))
+        vs = draw(st.lists(vertex, min_size=1, max_size=8))
+        if kind == "zero_area":
+            vs = vs + vs[-2::-1]
+        elif kind == "closed":
+            vs = vs + vs[:1]
+        dup = draw(st.lists(st.integers(0, len(vs) - 1), max_size=2))
+        for i in sorted(dup, reverse=True):
+            vs.insert(i, vs[i])
+        return np.array([v[0] for v in vs]), np.array([v[1] for v in vs])
+
+    keys = draw(
+        st.lists(st.tuples(st.integers(1, 3), st.integers(0, 1)),
+                 min_size=1, max_size=3, unique=True)
+    )
+    geom = {k: [ring() for _ in range(draw(st.integers(1, 3)))] for k in keys}
+    pts = []
+    for _ in range(draw(st.integers(0, 30))):
+        xs, ys = draw(st.sampled_from([r for rings in geom.values() for r in rings]))
+        i = draw(st.integers(0, len(xs) - 1))
+        j = min(i + 1, len(xs) - 1)
+        pts.append(draw(st.sampled_from([
+            (xs[i], ys[i]),  # a vertex
+            ((xs[i] + xs[j]) / 2, (ys[i] + ys[j]) / 2),  # on an edge
+            (draw(grid), draw(grid)),
+            (draw(free), draw(free)),
+        ])))
+    lons = np.array([p[0] for p in pts], dtype=np.float64)
+    lats = np.array([p[1] for p in pts], dtype=np.float64)
+    pool = keys + [(9, 9)]  # (9, 9) has no geometry: dropped silently
+    cand = draw(st.lists(
+        st.tuples(st.integers(0, max(len(pts) - 1, 0)), st.sampled_from(pool)),
+        max_size=60 if pts else 0,
+    ))
+    tile = draw(st.sampled_from([8, 997, P.TILE_ELEMS]))
+    return level, geom, lons, lats, cand, tile
+
+
+@settings(max_examples=300, deadline=None)
+@given(case=_refine_case())
+def test_refine_matches_brute_force(case):
+    level, geom, lons, lats, cand, tile = case
+    idx = P.PipIndex([] if level is None else [level], {}, geom)
+    pt = np.array([c[0] for c in cand], dtype=np.int64)
+    rel = np.array([c[1][0] for c in cand], dtype=np.int64)
+    poly = np.array([c[1][1] for c in cand], dtype=np.int64)
+    want = np.array([
+        k in geom and bool(_brute_contains(geom[k], lons[[i]], lats[[i]])[0])
+        for i, k in cand
+    ], dtype=bool)
+    saved = P.TILE_ELEMS
+    P.TILE_ELEMS = tile
+    try:
+        got = idx.refine(pt, rel, poly, lons, lats)
+    finally:
+        P.TILE_ELEMS = saved
+    np.testing.assert_array_equal(got, want)
