@@ -30,16 +30,17 @@ Scale shape (the 100-TB view):
   per-round persist/release so round k reads round k-1's cache, not
   its lineage. K rounds = K small shuffles over the type table —
   independent of corpus size.
-- Encoding uses the same Zipf dedup: encode each DISTINCT word once
-  (the merge folds are literal-specialized Catalyst expressions — no
-  Python in the loop), then broadcast-join the word→pieces dictionary
-  back to the corpus and reassemble per document ordered by word
-  position. Production merge counts (256–32k) apply the folds in
-  CHUNKS over the distinct-word table — ≤8 guarded folds per staged
-  projection (the guard's tree doubles per merge, so chunking bounds
-  the analyzer; its contains() probe is what keeps Zipf-tail words
-  from paying K folds of CPU), lazy lineage truncation between chunks
-  so projections cannot re-collapse — still corpus-size-independent,
+- Encoding uses the same Zipf dedup: encode each DISTINCT word once,
+  then broadcast-join the word→pieces dictionary back to the corpus
+  and reassemble per document ordered by word position. Up to
+  ``chunk_size`` merges the dictionary is built by literal-specialized
+  Catalyst folds (no Python in the loop). Production merge counts
+  (256–32k) cannot ride Catalyst expressions (the guarded fold tree
+  doubles per merge; staged chunked projections were measured to OOM),
+  so past ``chunk_size`` the dictionary is built by an Arrow-batched
+  Python kernel over the distinct-word table: the rank-order greedy
+  merge loop with the same contains() guard, which keeps Zipf-tail
+  words from paying K merges of CPU. Still corpus-size-independent,
   pinned against the python twin at K=256 (test_bpe).
 
 No reference analog (pmezard/osm has no text pipeline); SURVEY

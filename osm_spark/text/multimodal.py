@@ -78,9 +78,9 @@ def decode_image_stub(payload: bytes, dim: int = 16, strict: bool = False) -> np
 
 
 def decode_image(payload: bytes, dim: int = 16) -> tuple[np.ndarray, dict | None]:
-    """Real decode when the payload is a PNG or a baseline JPEG (both
-    pure-python codecs), md5 stub otherwise. Returns (float32[dim]
-    features, meta-or-None).
+    """Real decode when the payload is a PNG, a baseline JPEG or a GIF
+    (all pure-python codecs; a GIF contributes its first frame), md5
+    stub otherwise. Returns (float32[dim] features, meta-or-None).
 
     Features are ``dim`` equal-width block means over the row-major
     pixel stream, each scaled to [0, 1]: sum(block)/len(block)/255 —
@@ -88,8 +88,8 @@ def decode_image(payload: bytes, dim: int = 16) -> tuple[np.ndarray, dict | None
     pixel formula (PNG: q61; JPEG: q163 via the DC closed form). RGB
     pixels are averaged to grey first (integer-exact: sum//3 is NOT
     used — float mean keeps parity with the oracle's SUM/3.0). The
-    stub fallback now covers only formats with no pure-python decoder
-    here (GIF/WebP/progressive JPEG/...)."""
+    stub fallback covers only formats with no pure-python decoder
+    here (WebP/progressive JPEG/...) and payloads a codec rejects."""
     from osm_spark.text.jpeg import SOI, decode_jpeg
     from osm_spark.text.png import PNG_SIGNATURE, decode_png
 
@@ -144,9 +144,10 @@ def extract_features(
     """mapInPandas feature extraction over Arrow batches of binary
     payloads — the real distributed shape of a decode stage (batch
     size bounded by arrow maxRecordsPerBatch, payloads never collected
-    to the driver). PNG payloads are REALLY decoded (width/height from
-    IHDR, features from pixels, decoded=true); anything else degrades
-    to the md5 stub with decoded=false.
+    to the driver). PNG, baseline JPEG and GIF payloads are REALLY
+    decoded (width/height from the header, features from pixels,
+    decoded=true); anything else degrades to the md5 stub with
+    decoded=false.
 
     ``keep``: passthrough columns (e.g. the source url) carried through
     the decode stage — cheaper and collision-proof vs re-joining on
