@@ -237,9 +237,8 @@ class PipIndex:
         result is bit-identical to testing all edges of the polygon.
         Crossing parity per (candidate, ring) and the on-edge test per
         candidate reduce with np.bincount. Pairs are processed in
-        chunks, so a coastline-class polygon
-        against a full Arrow batch stays memory-bounded (TILE_ELEMS / 8
-        pairs per chunk).
+        chunks of TILE_ELEMS / 8, so a coastline-class polygon against
+        a full Arrow batch stays memory-bounded.
 
         Candidates whose (rel, poly) has no geometry get False — the
         historical cogroup drop semantics on inconsistent input.
