@@ -1,6 +1,6 @@
 """Scale-robustness of the exact PIP kernels (VERDICT r2 #1):
-memory-bounded tiling + bbox segment slicing must be bit-identical to
-the unbounded dense kernel, and a high-vertex (coastline-class) polygon
+memory-bounded chunking + row-banded edge lists must be bit-identical
+to the unbounded dense kernel, and a high-vertex (coastline-class) polygon
 must refine under a fixed memory budget instead of materializing
 (points × all-segments) matrices.
 """
