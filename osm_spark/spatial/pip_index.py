@@ -259,7 +259,9 @@ class PipIndex:
         ok = known & (r >= 0) & (r < t.base[p + 1] - t.base[p])
         slot = np.where(ok, t.base[p] + r, 0)
         lo = t.offs[slot]
-        cnt = np.where(ok, t.offs[slot + 1] - lo, 0)
+        # A table with no edges has offs == [0]: index slot + 1 only
+        # where the row exists.
+        cnt = t.offs[np.where(ok, slot + 1, slot)] - lo
         n_rings = np.where(known, t.ring0[p + 1] - t.ring0[p], 0)
         rbase = np.cumsum(n_rings) - n_rings
         odd = np.zeros(int(n_rings.sum()), dtype=bool)  # parity per (cand, ring)
